@@ -15,6 +15,11 @@ Layout (SURVEY §7.3 + driver package contract):
   sources/     pages reader, bucketed segment storage, checkpoints
   plans/       plan-inspection helpers (explain audits)
   streaming/   incremental index ingest (Structured Streaming)
+  zipguard.py  stops Python workers re-reading unchanged zips per task
 """
+
+from . import zipguard
+
+zipguard.install()
 
 __version__ = "0.1.0"

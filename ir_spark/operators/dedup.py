@@ -17,10 +17,15 @@ training-data pipeline runs before indexing, built Spark-first:
 - SimHash: declarative bit arithmetic over (term, tf) — stays in
   whole-stage codegen, no Python.
 
-Portability contract: every hash is ``md5`` of an explicit string —
-identical in Spark and ANSI/DuckDB SQL — and MinHash minimizes the md5
-*hex string* (lexicographic order == numeric order on the 128-bit
-value), so the DuckDB oracle can reproduce signatures bit-for-bit.
+Portability contract (MinHash signatures and LSH bands): every hash
+is ``md5`` of an explicit string — identical in Spark and ANSI/DuckDB
+SQL — and MinHash minimizes the md5 *hex string* (lexicographic order
+== numeric order on the 128-bit value), so the DuckDB oracle can
+reproduce signatures and band hashes bit-for-bit.  ``curate``'s
+Jaccard verification is outside that contract: it hashes shingles to
+Spark's ``xxhash64`` (int64) before the set joins.  Its Jaccard values
+equal the md5/text ones up to 64-bit collisions (negligible), but the
+shingle hashes themselves are Spark-specific, not portable.
 """
 
 from __future__ import annotations
@@ -206,6 +211,15 @@ def curate(docs: DataFrame, *, jaccard_threshold: float = 0.3,
     Scale: each step is the corresponding operator above (one shuffle
     each); the near-dup drop joins the (small) dropped-id set back as
     an anti-join, broadcast when it fits.
+
+    Eager by default: with ``caches=None`` the call materializes the
+    kept-id set (``localCheckpoint(eager=True)``, Spark jobs run inside
+    ``curate``) so its three intermediate caches can be released before
+    it returns; the result is then rebuilt from ``docs`` by a semi-join,
+    which scans ``docs`` once more when consumed.  Pass ``caches`` (a
+    list) for a lazy plan: nothing runs until the caller acts on the
+    result, and the caller unpersists the cached DataFrames appended
+    to the list afterwards.
     """
     # 1. exact dedup: keep min doc_id per text hash
     keep_exact = (

@@ -174,13 +174,14 @@ class SegmentIndex:
         if "local_dict" not in self._dfs:
             # sum, not read: incremental appends (streaming/
             # incremental.py) store dictionary DELTA rows per batch —
-            # df(term) is their sum
+            # df(term) is their sum.  One bounded collect: more than
+            # LOCAL_DICT_MAX rows back means "too big to hold locally"
             agg = self.dictionary.groupBy("term").agg(
                 F.sum("df").alias("df"))
-            n_terms = agg.count()
+            rows = agg.limit(self.LOCAL_DICT_MAX + 1).collect()
             self._dfs["local_dict"] = (
-                {r["term"]: int(r["df"]) for r in agg.collect()}
-                if n_terms <= self.LOCAL_DICT_MAX else None)
+                {r["term"]: int(r["df"]) for r in rows}
+                if len(rows) <= self.LOCAL_DICT_MAX else None)
         local = self._dfs["local_dict"]
         if local is not None:
             return {t: local[t] for t in terms if t in local}

@@ -1,16 +1,18 @@
 """Concurrent query serving: a micro-batching front-end over the
 fused batch scorer.
 
-Why this exists (measured, PLANS.md §"concurrent serving"): one
-``search_segments`` call costs ~90 ms of DRIVER-side work — ~260 py4j
-round-trips building the per-query plan (literals, isin lists, the
-mapInPandas kernel registration) plus the collect — all under the
-Python GIL.  Eight client threads therefore cap out around ~16 q/s no
-matter how idle the executors are, and fair scheduling cannot help
-because the bottleneck is not executor slots.  The fused batch path
-(``search_segments_batch``) pays that driver cost ONCE for the whole
-workload and scans each posting exactly once, which is why it runs at
-~45-50 q/s on the same box.
+Why this exists (measured, PLANS.md §53, §58): every query pays a
+fixed cost that does not shrink with its size.  Part of it is ~90 ms
+of DRIVER-side work — ~260 py4j round-trips building the per-query
+plan (literals, isin lists, the mapInPandas kernel registration) plus
+the collect — all under the Python GIL, so eight client threads cap
+out around ~16 q/s no matter how idle the executors are.  That is not
+the per-query floor, though: the larger layer was the PySpark worker's
+per-task setup, ~0.1 s per Python task spent re-reading pyspark.zip's
+directory before any kernel ran (now ~0.05 s, see ``ir_spark/
+zipguard.py``).  The fused batch path (``search_segments_batch``) pays
+both fixed costs ONCE for the whole workload and scans each posting
+exactly once, which is why it runs at ~45-50 q/s on the same box.
 
 ``MicroBatchServer`` turns that batch shape into a serving shape — the
 standard high-QPS pattern (dynamic batching, as in model-serving
@@ -40,11 +42,15 @@ from __future__ import annotations
 
 import queue
 import threading
+import time
 from concurrent.futures import Future, InvalidStateError
 
 from pyspark.sql import SparkSession
 
 from .segment_query import SegmentIndex, search_segments_batch
+
+# how often a submitter blocked on a full queue re-checks for close()
+_CLOSE_POLL_S = 0.05
 
 
 def _complete(fut: Future, result=None, exc: Exception | None = None) -> None:
@@ -88,10 +94,9 @@ class MicroBatchServer:
         self._kw = dict(k=k, mode=mode, k1=k1, b=b, stem=stem)
         self._max_batch = max_batch
         self._max_wait = max_wait_ms / 1000.0
-        # close()'s sentinel may briefly block on a full queue — fine:
-        # the worker is still draining, so a slot always frees up
         self._q: queue.Queue = queue.Queue(maxsize=max_queue)
         self._closed = False
+        self._stop = False  # set by the worker when it takes the sentinel
         self._lock = threading.Lock()  # makes submit/close atomic
         self._worker = threading.Thread(target=self._run, daemon=True)
         self._worker.start()
@@ -121,11 +126,23 @@ class MicroBatchServer:
                 if not block:
                     raise
         # slow path (queue full, block=True): wait for a slot OUTSIDE
-        # the lock.  This put can race close() and land after the
-        # sentinel; the post-join drain in close() and the re-check
-        # below make sure the future still resolves (with an error)
-        # instead of hanging.
-        self._q.put((query, fut), block=True, timeout=timeout)
+        # the lock, in short waits that re-check ``_closed`` — once the
+        # worker has stopped nothing frees a slot, so an unbounded put
+        # could wait forever.  A put that lands after the sentinel is
+        # failed by the post-join drain in close() or the re-check
+        # below, so the future resolves (with an error) either way.
+        deadline = None if timeout is None else time.monotonic() + timeout
+        while not self._closed:
+            wait = _CLOSE_POLL_S
+            if deadline is not None:
+                wait = min(wait, deadline - time.monotonic())
+                if wait <= 0:
+                    raise queue.Full
+            try:
+                self._q.put((query, fut), timeout=wait)
+                break
+            except queue.Full:
+                pass
         if self._closed:
             _complete(fut, exc=RuntimeError("server closed"))
         return fut
@@ -136,8 +153,9 @@ class MicroBatchServer:
             if self._closed:
                 return
             self._closed = True
-        # outside the lock: a full queue may briefly block this put,
-        # and the worker keeps draining so a slot always frees up
+        # outside the lock: a full queue may briefly block this put;
+        # the worker keeps draining until it takes the sentinel, and
+        # slow-path submitters stop competing for slots once _closed
         self._q.put(None)
         self._worker.join()
         # fail anything that slipped in behind the sentinel (slow-path
@@ -165,15 +183,17 @@ class MicroBatchServer:
                 item = self._q.get(timeout=deadline)
             except queue.Empty:
                 break
-            if item is None:  # close() sentinel: finish this batch
-                self._q.put(None)
+            if item is None:  # close() sentinel: finish this batch, then stop
+                # (re-queueing it instead could block this, the only
+                # consumer, on a queue refilled by blocked submitters)
+                self._stop = True
                 break
             batch.append(item)
             deadline = 0.0  # after the first wait, take only what's ready
         return batch
 
     def _run(self) -> None:
-        while True:
+        while not self._stop:
             batch = self._drain()
             if batch is None:
                 return

@@ -113,25 +113,33 @@ def parse_query(text: str, stem: bool = False) -> dict[str, int]:
 
 
 def _doc_weight(idx: Index, mode: str, term: str, doc_id: int, tf: int,
-                k1: float, b: float) -> float:
+                k1: float, b: float, avg_dl: float | None = None) -> float:
+    """One posting's document weight.  ``Index.avg_doc_len`` sums all
+    docinfo, so callers scoring many postings compute it once and pass
+    it as ``avg_dl``."""
     df = idx.df(term)
     doc_len, max_tf = idx.docinfo[doc_id]
     if mode == "w1":
         return max_tf_weight(tf, max_tf, df, idx.n_docs)
+    if avg_dl is None:
+        avg_dl = idx.avg_doc_len
     if mode == "w2":
-        return okapi_weight(tf, doc_len, df, idx.n_docs, idx.avg_doc_len)
+        return okapi_weight(tf, doc_len, df, idx.n_docs, avg_dl)
     if mode == "bm25":
-        return bm25_weight(tf, doc_len, df, idx.n_docs, idx.avg_doc_len, k1, b)
+        return bm25_weight(tf, doc_len, df, idx.n_docs, avg_dl, k1, b)
     raise ValueError(mode)
 
 
-def doc_norms(idx: Index, mode: str, k1: float = 1.2, b: float = 0.75) -> dict[int, float]:
+def doc_norms(idx: Index, mode: str, k1: float = 1.2, b: float = 0.75,
+              avg_dl: float | None = None) -> dict[int, float]:
     """Idempotent per-doc L2 norms over ALL index terms (D4; reference
     accumulated these statefully, QueryParser.java:108-133)."""
+    if avg_dl is None:
+        avg_dl = idx.avg_doc_len
     sq: dict[int, float] = {}
     for term in sorted(idx.postings):
         for doc_id, tf in idx.postings[term]:
-            w = _doc_weight(idx, mode, term, doc_id, tf, k1, b)
+            w = _doc_weight(idx, mode, term, doc_id, tf, k1, b, avg_dl)
             sq[doc_id] = sq.get(doc_id, 0.0) + w * w
     return {d: math.sqrt(v) for d, v in sq.items()}
 
@@ -155,6 +163,7 @@ def search(idx: Index, query: str, k: int = 5, mode: str = "bm25",
         normalize = mode in ("w1", "w2")
 
     max_tf_q = max(q.values())
+    avg_dl = idx.avg_doc_len
     scores: dict[int, float] = {}
     q_len_sq = 0.0
     for term in sorted(q):
@@ -165,11 +174,11 @@ def search(idx: Index, query: str, k: int = 5, mode: str = "bm25",
             w_tq = max_tf_weight(tf_q, max_tf_q, idx.df(term), idx.n_docs)
         q_len_sq += w_tq * w_tq
         for doc_id, tf in idx.postings.get(term, ()):
-            w_td = _doc_weight(idx, mode, term, doc_id, tf, k1, b)
+            w_td = _doc_weight(idx, mode, term, doc_id, tf, k1, b, avg_dl)
             scores[doc_id] = scores.get(doc_id, 0.0) + w_td * w_tq
 
     if normalize:
-        norms = doc_norms(idx, mode, k1, b)
+        norms = doc_norms(idx, mode, k1, b, avg_dl)
         q_len = math.sqrt(q_len_sq)
         scores = {
             d: (s / norms[d] / q_len if norms[d] > 0 and q_len > 0 else 0.0)

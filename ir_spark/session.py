@@ -12,6 +12,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the machine's physical memory, at most 32g.
+
+    In local mode the driver JVM is the whole engine.  A heap cap above
+    the machine's RAM lets G1 keep growing the heap instead of
+    collecting, until the kernel's OOM killer ends the JVM and every
+    later job fails: under a 32g cap the test suite's JVM reached
+    15 GB RSS on a 16 GB machine and was killed.  Half the RAM leaves
+    room for the JVM's off-heap memory and the Python workers."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "32g"
+    return f"{max(512, min(32 * 1024, phys // 2 // 2**20))}m"
+
+
 def get_spark(app_name: str = "ir_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
@@ -29,7 +45,8 @@ def get_spark(app_name: str = "ir_spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("IR_SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("IR_SPARK_DRIVER_MEM",
+                                                     default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # FAIR lets concurrent query jobs share executor slots instead

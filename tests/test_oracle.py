@@ -109,3 +109,70 @@ class TestSearch:
         n1 = doc_norms(idx, "w1")
         n2 = doc_norms(idx, "w1")
         assert n1 == n2
+
+
+def _search_per_posting_avg(idx, query, mode, norms):
+    """The scorer as it was before avg_doc_len was hoisted: every
+    posting re-evaluates ``Index.avg_doc_len`` (via ``_doc_weight``
+    without ``avg_dl``).  ``norms`` are that scorer's doc norms."""
+    from ir_spark.oracle import _doc_weight
+
+    q = parse_query(query)
+    if not q:
+        return []
+    max_tf_q = max(q.values())
+    scores: dict[int, float] = {}
+    q_len_sq = 0.0
+    for term in sorted(q):
+        w_tq = (float(q[term]) if mode == "bm25" else
+                max_tf_weight(q[term], max_tf_q, idx.df(term), idx.n_docs))
+        q_len_sq += w_tq * w_tq
+        for doc_id, tf in idx.postings.get(term, ()):
+            w_td = _doc_weight(idx, mode, term, doc_id, tf, 1.2, 0.75)
+            scores[doc_id] = scores.get(doc_id, 0.0) + w_td * w_tq
+    if norms is not None:
+        q_len = math.sqrt(q_len_sq)
+        scores = {d: (s / norms[d] / q_len if norms[d] > 0 and q_len > 0
+                      else 0.0) for d, s in scores.items()}
+    return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
+
+
+def _norms_per_posting_avg(idx, mode):
+    from ir_spark.oracle import _doc_weight
+
+    sq: dict[int, float] = {}
+    for term in sorted(idx.postings):
+        for doc_id, tf in idx.postings[term]:
+            w = _doc_weight(idx, mode, term, doc_id, tf, 1.2, 0.75)
+            sq[doc_id] = sq.get(doc_id, 0.0) + w * w
+    return {d: math.sqrt(v) for d, v in sq.items()}
+
+
+class TestAvgDocLenOnce:
+    """``Index.avg_doc_len`` sums all docinfo; ``search`` evaluates it
+    once per call instead of once per posting scored, with bit-identical
+    results."""
+
+    def test_one_evaluation_per_search(self, oracle_index, monkeypatch):
+        from ir_spark.oracle import Index
+
+        calls = []
+        real = Index.avg_doc_len.fget
+        monkeypatch.setattr(Index, "avg_doc_len", property(
+            lambda self: calls.append(1) or real(self)))
+        for mode in ("w1", "w2", "bm25"):
+            for q in REFERENCE_QUERIES:
+                calls.clear()
+                search(oracle_index, q, k=5, mode=mode)
+                assert len(calls) <= 1, (mode, q, len(calls))
+
+    def test_bit_identical_to_per_posting_scorer(self, oracle_index):
+        for mode in ("w1", "w2", "bm25"):
+            norms = (None if mode == "bm25"
+                     else _norms_per_posting_avg(oracle_index, mode))
+            if norms is not None:
+                assert doc_norms(oracle_index, mode) == norms
+            for q in REFERENCE_QUERIES + EDGE_QUERIES:
+                assert search(oracle_index, q, k=5, mode=mode) == \
+                    _search_per_posting_avg(oracle_index, q, mode, norms), \
+                    (mode, q)

@@ -411,3 +411,42 @@ def test_schema_segments_matches_writer(spark, tmp_path):
     assert sorted(f.name for f in S.SEGMENTS.fields) == \
         sorted(written.columns), (
         "schema.SEGMENTS drifted from the writer's real columns")
+
+
+def test_df_of_first_call_is_one_collect(spark, index_dir, oracle_index,
+                                         monkeypatch):
+    """The first ``df_of`` on a fresh load pulls the summed dictionary
+    with ONE bounded collect (no separate count pass): it runs exactly
+    the jobs of one collect of the term aggregate, later calls run
+    none, and the answers equal the pushdown path's and the oracle's."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    terms = sorted(oracle_index.postings)[::40] + ["zzqunseenterm"]
+    want = {t: oracle_index.df(t) for t in terms
+            if t in oracle_index.postings}
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ref = SQ.SegmentIndex.load(spark, index_dir)
+    agg = ref.dictionary.groupBy("term").agg(F.sum("df").alias("df"))
+    _, one_collect = jobs_of("df_of_ref", agg.collect)
+
+    sidx = SQ.SegmentIndex.load(spark, index_dir)
+    sidx.dictionary  # the handle's schema read is load cost, not df_of's
+    got, n_jobs = jobs_of("df_of_first", lambda: sidx.df_of(terms))
+    assert (got, n_jobs) == (want, one_collect)
+    assert jobs_of("df_of_again", lambda: sidx.df_of(terms)) == (want, 0)
+
+    # a dictionary over the local bound falls back to the pushdown path
+    monkeypatch.setattr(SQ.SegmentIndex, "LOCAL_DICT_MAX",
+                        len(oracle_index.postings) - 1)
+    big = SQ.SegmentIndex.load(spark, index_dir)
+    assert big.df_of(terms) == want
+    assert big._dfs["local_dict"] is None

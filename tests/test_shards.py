@@ -338,6 +338,123 @@ class TestMicroBatchServer:
             gate.set()
             srv.close()
 
+    def test_close_under_saturation_does_not_deadlock(self, monkeypatch):
+        """close() on a full queue with blocked slow-path submitters
+        returns, and every future they got resolves.  The queue is
+        instrumented to force the losing interleaving: submitters reach
+        their blocking put() only after close()'s sentinel is waiting,
+        and every get() yields long enough for a waiting submitter to
+        take the slot it freed.  A worker that re-queued the sentinel
+        mid-batch would then block, the only consumer, forever."""
+        import threading
+        import time
+
+        import ir_spark.operators.serving as sv
+
+        gate = threading.Event()
+
+        class _FakeDF:
+            def collect(self):
+                return []
+
+        def slow_batch(spark_, sidx_, queries, **kw):
+            gate.wait(10)
+            return _FakeDF()
+
+        monkeypatch.setattr(sv, "search_segments_batch", slow_batch)
+        srv = sv.MicroBatchServer(None, None, max_batch=64,
+                                  max_wait_ms=200, max_queue=2)
+        q, real_get, real_put = srv._q, srv._q.get, srv._q.put
+
+        def get(*a, **kw):
+            item = real_get(*a, **kw)
+            time.sleep(0.05)  # a waiting submitter takes the freed slot
+            return item
+
+        def put(item, *a, **kw):
+            if item is not None and kw.get("block", True) and q.full():
+                while not srv._closed:  # queue behind close()'s put
+                    time.sleep(0.001)
+                time.sleep(0.1)
+            return real_put(item, *a, **kw)
+
+        futures, errors = [srv.submit("q0")], []
+        time.sleep(0.3)                       # worker stalls on q0
+        futures += [srv.submit("q1"), srv.submit("q2")]  # queue full
+        q.get, q.put = get, put
+
+        def client(i):
+            try:
+                futures.append(srv.submit(f"s{i}"))  # slow path
+            except Exception as exc:  # noqa: BLE001 — asserted below
+                errors.append(exc)
+
+        # daemon threads: a deadlock fails the test, not the whole run
+        clients = [threading.Thread(target=client, args=(i,), daemon=True)
+                   for i in range(4)]
+        for t in clients:
+            t.start()
+        time.sleep(0.1)
+        closer = threading.Thread(target=srv.close, daemon=True)
+        closer.start()
+        time.sleep(0.3)
+        gate.set()
+        closer.join(10)
+        assert not closer.is_alive(), "close() deadlocked"
+        for t in clients:
+            t.join(10)
+            assert not t.is_alive(), "a blocked submit never returned"
+        assert errors == []
+        assert len(futures) == 7
+        assert [f.result(0) for f in futures[:3]] == [[], [], []]
+        for f in futures[3:]:
+            try:
+                assert f.result(5) == []
+            except RuntimeError as exc:
+                assert str(exc) == "server closed"
+
+    def test_close_releases_blocked_submitter(self, monkeypatch):
+        """A submit() blocked on a full queue returns a failed future as
+        soon as close() starts, without waiting for a slot that a
+        stopped worker would never free."""
+        import threading
+        import time
+
+        import ir_spark.operators.serving as sv
+
+        gate = threading.Event()
+
+        class _FakeDF:
+            def collect(self):
+                return []
+
+        def slow_batch(spark_, sidx_, queries, **kw):
+            gate.wait(10)
+            return _FakeDF()
+
+        monkeypatch.setattr(sv, "search_segments_batch", slow_batch)
+        srv = sv.MicroBatchServer(None, None, max_batch=1,
+                                  max_wait_ms=1, max_queue=1)
+        srv.submit("q0")
+        time.sleep(0.3)                       # worker stalls on q0
+        srv.submit("q1")                      # queue full
+        got = []
+        client = threading.Thread(
+            target=lambda: got.append(srv.submit("q2")), daemon=True)
+        client.start()
+        time.sleep(0.2)
+        closer = threading.Thread(target=srv.close, daemon=True)
+        closer.start()
+        try:
+            client.join(2)                    # worker still stalled
+            assert not client.is_alive(), "submit stayed blocked"
+            with pytest.raises(RuntimeError, match="server closed"):
+                got[0].result(0)
+        finally:
+            gate.set()
+            closer.join(10)
+        assert not closer.is_alive()
+
     def test_cancelled_future_does_not_kill_worker(self, monkeypatch):
         """A client cancel() after timeout must not raise
         InvalidStateError inside the worker (which would hang every
