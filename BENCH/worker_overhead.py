@@ -1,11 +1,17 @@
 #!/usr/bin/env python
-"""Per-Python-task worker setup cost (ir_spark/zipguard.py).
+"""Per-Python-task worker setup cost (ir_spark/zipguard.py, session.py).
 
 On one warm session, times N one-task jobs that run a trivial Python
 kernel (``zipguard.worker_report`` via mapInPandas) against N one-task
 jobs that never leave the JVM.  The median difference is what the
 PySpark worker spends per task before any kernel runs; every query,
 served batch and build stage pays it once per Python task.
+
+It is about 7 ms over the Unix-socket transport ``get_spark`` sets up
+(``"transport": "uds"``).  The ~40 ms this reported before was not
+worker work but a socket stall: over Spark's loopback TCP (``"tcp"``)
+the task header and first Arrow batch wait out Nagle's algorithm and
+delayed ACK (PLANS.md §59).
 
 Usage::
 
@@ -56,6 +62,9 @@ def main() -> int:
         for _ in range(3):  # start the worker; guard it from task 2 on
             python_job.collect()
             one.collect()
+        transport = ("uds" if spark.sparkContext.getConf().get(
+            "spark.python.unix.domain.socket.enabled", "false") == "true"
+            else "tcp")
         jvm_s = _median_s(one.collect, args.jobs)
         python_s = _median_s(python_job.collect, args.jobs)
         rows = python_job.collect()
@@ -67,6 +76,7 @@ def main() -> int:
         "python_job_s": round(python_s, 4),
         "python_task_setup_s": round(python_s - jvm_s, 4),
         "worker_guarded": bool(rows[0]["guarded"]),
+        "transport": transport,
     }))
     return 0
 

@@ -1,18 +1,20 @@
 """Concurrent query serving: a micro-batching front-end over the
 fused batch scorer.
 
-Why this exists (measured, PLANS.md §53, §58): every query pays a
+Why this exists (measured, PLANS.md §53, §58, §59): every query pays a
 fixed cost that does not shrink with its size.  Part of it is ~90 ms
 of DRIVER-side work — ~260 py4j round-trips building the per-query
 plan (literals, isin lists, the mapInPandas kernel registration) plus
 the collect — all under the Python GIL, so eight client threads cap
 out around ~16 q/s no matter how idle the executors are.  That is not
 the per-query floor, though: the larger layer was the PySpark worker's
-per-task setup, ~0.1 s per Python task spent re-reading pyspark.zip's
-directory before any kernel ran (now ~0.05 s, see ``ir_spark/
-zipguard.py``).  The fused batch path (``search_segments_batch``) pays
-both fixed costs ONCE for the whole workload and scans each posting
-exactly once, which is why it runs at ~45-50 q/s on the same box.
+per-task setup, ~0.1 s per Python task, first spent re-reading
+pyspark.zip's directory (``ir_spark/zipguard.py``), then ~40 ms of
+loopback-TCP stall on the task's first Arrow batch (now ~7 ms over
+Unix sockets, ``ir_spark/session.py``).  The fused batch path
+(``search_segments_batch``) pays both fixed costs ONCE for the whole
+workload and scans each posting exactly once, which is why it runs at
+~45-50 q/s on the same box.
 
 ``MicroBatchServer`` turns that batch shape into a serving shape — the
 standard high-QPS pattern (dynamic batching, as in model-serving
