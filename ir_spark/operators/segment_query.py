@@ -8,11 +8,15 @@ Query plan:
   2. ``segments`` scan pruned TWICE: partition pruning on
      ``bucket IN (md5-buckets of query terms)`` (directory level) +
      row-group stats on ``term`` (rows sorted by term within files).
-  3. per-run DAAT scoring: all query terms of one doc-range run are
+  3. per-run scoring: all query terms of one doc-range run are
      co-partitioned by construction (operators/segments.py), so
-     ``groupBy(run).applyInPandas`` scores documents with a dense
-     numpy accumulator and emits only the run-local top-k — NO doc_id
-     shuffle, candidate traffic is k rows per run.
+     ``groupBy(run).applyInPandas`` runs ONE kernel for every mode and
+     every batch size (a single query is a batch of one): queries come
+     in as data, ``term -> [(query_id, w_tq)]`` plus per-query
+     constants; each posting is decoded and weighted once, summed per
+     query in a sparse accumulator, and only the run-local top-k per
+     query is emitted — NO doc_id shuffle, candidate traffic is k rows
+     per run and query.
   4. global merge: orderBy(score desc, doc_id asc).limit(k) over
      (runs x k) rows — TakeOrderedAndProject.
 
@@ -34,9 +38,11 @@ kept via >=).  Verified against exhaustive on every test query
 (SURVEY §5.2.4).  Driver-side state is O(1) in the run count —
 VERDICT r01 item 2 (collect()/isin()/closure-dict pruning) is gone.
 
-Cosine modes (w1/w2) use the exhaustive path + the build-time norms
-table (normalization is not monotone per-term, so WAND bounds don't
-apply; the reference's own cosine model predates WAND).
+Every mode other than bm25 scores exhaustively.  The cosine modes
+(w1/w2) emit every candidate's dot product and normalize by the
+build-time norms table and the query's own norm
+(normalization is not monotone per-term, so WAND bounds don't apply;
+the reference's own cosine model predates WAND).
 """
 
 from __future__ import annotations
@@ -166,25 +172,30 @@ class SegmentIndex:
             .groupBy("term").agg(F.sum(col).alias("v")).collect())
         return {r["term"]: int(r["v"]) for r in rows if r["v"]}
 
-    def df_of(self, terms: list[str]) -> dict[str, int]:
-        if self.as_of_grp is not None:
-            return self._asof_term_stats(terms, "run_df")
+    def _local_dict(self) -> dict[str, tuple[int, int]] | None:
+        """The current view's summed ``term -> (df, cf)`` map, pulled to
+        the driver once and memoized; None when the vocabulary exceeds
+        LOCAL_DICT_MAX.  Summed, not read: incremental appends
+        (streaming/incremental.py) store dictionary DELTA rows per batch
+        — a term's stats are their sum.  One bounded collect: more than
+        LOCAL_DICT_MAX rows back means "too big to hold locally"."""
         if self._dfs is None:
             object.__setattr__(self, "_dfs", {})
         if "local_dict" not in self._dfs:
-            # sum, not read: incremental appends (streaming/
-            # incremental.py) store dictionary DELTA rows per batch —
-            # df(term) is their sum.  One bounded collect: more than
-            # LOCAL_DICT_MAX rows back means "too big to hold locally"
             agg = self.dictionary.groupBy("term").agg(
-                F.sum("df").alias("df"))
+                F.sum("df").alias("df"), F.sum("cf").alias("cf"))
             rows = agg.limit(self.LOCAL_DICT_MAX + 1).collect()
             self._dfs["local_dict"] = (
-                {r["term"]: int(r["df"]) for r in rows}
+                {r["term"]: (int(r["df"]), int(r["cf"] or 0)) for r in rows}
                 if len(rows) <= self.LOCAL_DICT_MAX else None)
-        local = self._dfs["local_dict"]
+        return self._dfs["local_dict"]
+
+    def df_of(self, terms: list[str]) -> dict[str, int]:
+        if self.as_of_grp is not None:
+            return self._asof_term_stats(terms, "run_df")
+        local = self._local_dict()
         if local is not None:
-            return {t: local[t] for t in terms if t in local}
+            return {t: local[t][0] for t in terms if t in local}
         rows = (
             self.dictionary.filter(F.col("term").isin(terms))
             .groupBy("term").agg(F.sum("df").alias("df")).collect()
@@ -196,6 +207,10 @@ class SegmentIndex:
         same contract as df_of); terms with no postings are absent."""
         if self.as_of_grp is not None:
             return self._asof_term_stats(terms, "run_cf")
+        local = self._local_dict()
+        if local is not None:
+            return {t: local[t][1] for t in terms
+                    if t in local and local[t][1]}
         rows = (
             self.dictionary.filter(F.col("term").isin(terms))
             .groupBy("term").agg(F.sum("cf").alias("cf")).collect()
@@ -204,15 +219,22 @@ class SegmentIndex:
 
     def cf_total(self) -> int:
         """Total collection token count over indexed terms (the LM
-        denominator) — one dictionary sweep (as-of: one segment-stat
-        sweep over the snapshot's groups), cached."""
+        denominator), cached: the sum over the local term-stat map, or
+        one dictionary sweep above LOCAL_DICT_MAX (as-of: one
+        segment-stat sweep over the snapshot's groups)."""
         if self._dfs is None:
             object.__setattr__(self, "_dfs", {})
         if "cf_total" not in self._dfs:
-            src = (self.segments.agg(F.sum("run_cf"))
-                   if self.as_of_grp is not None
-                   else self.dictionary.agg(F.sum("cf")))
-            self._dfs["cf_total"] = int(src.collect()[0][0] or 0)
+            local = (self._local_dict() if self.as_of_grp is None
+                     else None)
+            if local is not None:
+                total = sum(cf for _df, cf in local.values())
+            else:
+                src = (self.segments.agg(F.sum("run_cf"))
+                       if self.as_of_grp is not None
+                       else self.dictionary.agg(F.sum("cf")))
+                total = src.collect()[0][0] or 0
+            self._dfs["cf_total"] = int(total)
         return self._dfs["cf_total"]
 
     def deleted_bc(self):
@@ -240,24 +262,40 @@ class SegmentIndex:
 # --- numpy weight kernels (must match oracle.py bit-for-bit) -----------------
 
 
-def _mask_deleted_offsets(touched: np.ndarray, deleted, base: int,
-                          range_width: int) -> None:
-    """Clear the run-local offsets of tombstoned doc ids in a dense
-    candidate mask, in place.  ``deleted`` is the Broadcast handle from
+def _run_deleted(deleted, base: int, range_width: int) -> np.ndarray | None:
+    """Run-local offsets of the tombstoned doc ids in [base,
+    base+width), or None.  ``deleted`` is the Broadcast handle from
     SegmentIndex.deleted_bc (or None).  Sorted-array slice: O(log D)
-    per run, touching only the ids that fall inside [base, base+width).
-    Masking happens BEFORE the run-local top-k so live docs ranked just
-    below a deleted one still surface."""
+    per run.  The kernels drop these docs BEFORE their run-local top-k,
+    so live docs ranked just below a deleted one still surface."""
     if deleted is None:
-        return
+        return None
     dels = deleted.value
     lo, hi = np.searchsorted(dels, [base, base + range_width])
-    if hi > lo:
-        touched[dels[lo:hi] - base] = False
+    return dels[lo:hi] - base if hi > lo else None
+
+
+def _mask_deleted_offsets(touched: np.ndarray, deleted, base: int,
+                          range_width: int) -> None:
+    """Clear the tombstoned offsets of a dense candidate mask in place."""
+    off = _run_deleted(deleted, base, range_width)
+    if off is not None:
+        touched[off] = False
+
+
+_LN2 = math.log(2.0)
+_LOG2E = math.log2(math.e)
+_TWO_PI = 2.0 * math.pi
+
 
 def _np_doc_weight(mode: str, tf: np.ndarray, dl: np.ndarray, mtf: np.ndarray,
                    df: int, n_docs: int, avg_dl: float, k1: float, b: float,
-                   delta: float = 0.0) -> np.ndarray:
+                   delta: float = 0.0, *, cf: float = 0.0,
+                   c_total: float = 0.0, mu: float = 0.0, lam: float = 0.0,
+                   c: float = 1.0) -> np.ndarray:
+    """Query-independent per-posting weight w_td; a document's score is
+    the sum of w_td * w_tq over its matched query terms (plus, for
+    qld/lmjm, a per-query finishing step — see _make_run_kernel)."""
     tf = tf.astype(np.float64)
     if mode == "w1":
         if df == 0:
@@ -304,189 +342,117 @@ def _np_doc_weight(mode: str, tf: np.ndarray, dl: np.ndarray, mtf: np.ndarray,
         dlf = dl.astype(np.float64)
         num = 1.0 + np.log(1.0 + np.log(tf))
         return num / (1.0 - b + b * dlf / avg_dl) * idf
+    # the cf-statistics LM family (query.py::search_qld / search_lmjm /
+    # search_pl2 decompositions, numpy form); the query weight is qtf
+    if mode == "qld":
+        # Dirichlet: ln(1 + tf*C/(mu*cf)); the doc-length penalty and
+        # the query constant are per-query finishing terms
+        return np.log1p(tf * c_total / (mu * cf))
+    if mode == "lmjm":
+        # Jelinek-Mercer: ln(1 + (1-lam)*tf*C/(lam*dl*cf)); no
+        # doc-length term outside the matched sum
+        return np.log1p((1.0 - lam) / lam * tf * c_total
+                        / (dl.astype(np.float64) * cf))
+    if mode == "pl2":
+        # PL2 divergence from randomness with lambda_t = cf/N; log2 as
+        # ln/ln2 with the SAME double constants as the Catalyst
+        # expressions, so the engines stay bit-comparable
+        lam_t = cf / n_docs
+        tfn = tf * (np.log(1.0 + c * avg_dl / dl.astype(np.float64)) / _LN2)
+        gain = (tfn * (np.log(tfn / lam_t) / _LN2)
+                + (lam_t - tfn) * _LOG2E
+                + 0.5 * (np.log(_TWO_PI * tfn) / _LN2))
+        return 1.0 / (tfn + 1.0) * gain
     raise ValueError(mode)
 
 
-def _make_run_kernel(weights: dict[str, float], dfs: dict[str, int], *,
-                     mode: str, n_docs: int, avg_dl: float, k1: float,
-                     b: float, range_width: int, top_k: int, deleted=None,
-                     delta: float = 0.0):
-    """applyInPandas kernel over one doc-range run: dense-accumulator
-    TAAT scoring, emit run-local top-k (or all candidates when top_k=0
-    for cosine modes)."""
+BATCH_SCORE_SCHEMA = "query_id long, doc_id long, score double"
+
+
+def _make_run_kernel(term_q: dict[str, list[tuple[int, float]]],
+                     dfs: dict[str, int], cfs: dict[str, int],
+                     q_const: dict[int, tuple[float, float]], *, mode: str,
+                     range_width: int, top_k: int, deleted=None,
+                     **weight_args):
+    """applyInPandas kernel over one doc-range run that scores a batch
+    of queries passed as DATA — the one exhaustive scoring kernel; a
+    single query is a batch of one.
+
+    ``term_q`` maps term -> [(query_id, w_tq)]; ``dfs``/``cfs`` are the
+    per-term statistics _np_doc_weight reads (with ``weight_args``);
+    ``q_const`` maps query_id -> (const, q_len), the per-query
+    finishing terms of qld (const + sum - q_len*ln(dl + mu)) and lmjm
+    (const + sum).
+
+    Each posting row is decoded ONCE and its query-independent weight
+    w_td computed ONCE; every query consuming the term adds w_td * w_tq
+    into its own SPARSE accumulator, so kernel memory is O(candidate
+    postings), not O(n_queries * range_width) — the shape that survives
+    10k-query batches at a cluster-scale range_width of 2^22.  A doc's
+    addends are summed in row order from 0.0 (``np.add.at`` applies
+    them sequentially; ``add.reduceat`` would sum pairwise), the exact
+    float sequence of a dense per-query accumulator.  Zero products are
+    kept: OR semantics — a doc containing a zero-weight query term is
+    still a candidate (the D5 idf quirk, QueryParser.java:159-174).
+    Emits the run-local top-k per query, or every candidate when
+    ``top_k`` is 0 (cosine modes normalize downstream)."""
+    mu = weight_args.get("mu", 0.0)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         run = int(pdf["run"].iloc[0])
         base = run * range_width
-        acc = np.zeros(range_width, dtype=np.float64)
-        # OR-semantics candidate set: every doc containing >=1 query term
-        # is scored, even when its score is exactly 0.0 (the D5 idf quirk
-        # zeroes whole terms) — QueryParser.java:159-174
-        touched = np.zeros(range_width, dtype=bool)
+        del_off = _run_deleted(deleted, base, range_width)
+        # qid -> ([run-local offsets], [w_td * w_tq], [doc lengths])
+        parts: dict[int, tuple[list, list, list]] = {}
         for row in pdf.itertuples(index=False):
-            term = row.term
-            # NB: zero-weight terms still define candidates (OR
-            # semantics) — only skip terms absent from the query
-            w_tq = weights.get(term)
-            if w_tq is None:
+            consumers = term_q.get(row.term)
+            if not consumers:
                 continue
-            df_t = dfs.get(term, 0)
             ids = codec.delta_decode(row.doc_gaps_vb)
             tfs = codec.varbyte_decode(row.tfs_vb).astype(np.int64)
             dls = codec.varbyte_decode(row.doc_lens_vb).astype(np.int64)
-            mtfs = codec.varbyte_decode(row.max_tfs_vb).astype(np.int64)
-            w_td = _np_doc_weight(mode, tfs, dls, mtfs, df_t, n_docs,
-                                  avg_dl, k1, b, delta)
-            acc[ids - base] += w_td * w_tq
-            touched[ids - base] = True
-        _mask_deleted_offsets(touched, deleted, base, range_width)
-        idx = np.flatnonzero(touched)
-        if idx.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"})
-        scores = acc[idx]
-        doc_ids = idx + base
-        if top_k and idx.size > top_k:
-            # exact top-k with (score desc, doc_id asc) tie-break
-            order = np.lexsort((doc_ids, -scores))[:top_k]
-            doc_ids, scores = doc_ids[order], scores[order]
-        return pd.DataFrame({"doc_id": doc_ids.astype(np.int64),
-                             "score": scores})
-
-    return kernel
-
-
-def _make_qld_run_kernel(qcf: dict[str, tuple[float, float]], *,
-                         c_total: float, mu: float, const: float,
-                         q_len: float, range_width: int, top_k: int,
-                         deleted=None):
-    """applyInPandas kernel for Dirichlet query-likelihood over one
-    doc-range run (query.py::search_qld's decomposition, numpy form):
-    accumulate qtf*ln(1 + tf*C/(mu*cf)) per matched posting, then add
-    the driver-side constant and the doc-length penalty for candidate
-    docs.  ``qcf`` maps term -> (qtf, cf) for surviving query terms."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        run = int(pdf["run"].iloc[0])
-        base = run * range_width
-        acc = np.zeros(range_width, dtype=np.float64)
-        dl_arr = np.zeros(range_width, dtype=np.int64)
-        touched = np.zeros(range_width, dtype=bool)
-        for row in pdf.itertuples(index=False):
-            tw = qcf.get(row.term)
-            if tw is None:
-                continue
-            qtf, cf = tw
-            ids = codec.delta_decode(row.doc_gaps_vb)
-            tfs = codec.varbyte_decode(row.tfs_vb).astype(np.float64)
-            dls = codec.varbyte_decode(row.doc_lens_vb).astype(np.int64)
-            off = ids - base
-            acc[off] += qtf * np.log1p(tfs * c_total / (mu * cf))
-            dl_arr[off] = dls
-            touched[off] = True
-        _mask_deleted_offsets(touched, deleted, base, range_width)
-        idx = np.flatnonzero(touched)
-        if idx.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"})
-        scores = (const + acc[idx]
-                  - q_len * np.log(dl_arr[idx].astype(np.float64) + mu))
-        doc_ids = idx + base
-        if top_k and idx.size > top_k:
-            order = np.lexsort((doc_ids, -scores))[:top_k]
-            doc_ids, scores = doc_ids[order], scores[order]
-        return pd.DataFrame({"doc_id": doc_ids.astype(np.int64),
-                             "score": scores})
-
-    return kernel
-
-
-def _make_lmjm_run_kernel(qcf: dict[str, tuple[float, float]], *,
-                          c_total: float, lam: float, const: float,
-                          range_width: int, top_k: int, deleted=None):
-    """applyInPandas kernel for Jelinek-Mercer query likelihood over
-    one doc-range run (query.py::search_lmjm's decomposition, numpy
-    form): acc += qtf*ln(1 + (1-lam)*tf*C/(lam*dl*cf)) per matched
-    posting; score = const + acc — no doc-length term outside the
-    matched sum, so no doc-stat pass at all."""
-    ratio = (1.0 - lam) / lam
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        run = int(pdf["run"].iloc[0])
-        base = run * range_width
-        acc = np.zeros(range_width, dtype=np.float64)
-        touched = np.zeros(range_width, dtype=bool)
-        for row in pdf.itertuples(index=False):
-            tw = qcf.get(row.term)
-            if tw is None:
-                continue
-            qtf, cf = tw
-            ids = codec.delta_decode(row.doc_gaps_vb)
-            tfs = codec.varbyte_decode(row.tfs_vb).astype(np.float64)
-            dls = codec.varbyte_decode(row.doc_lens_vb).astype(np.float64)
-            off = ids - base
-            acc[off] += qtf * np.log1p(ratio * tfs * c_total / (dls * cf))
-            touched[off] = True
-        _mask_deleted_offsets(touched, deleted, base, range_width)
-        idx = np.flatnonzero(touched)
-        if idx.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"})
-        scores = const + acc[idx]
-        doc_ids = idx + base
-        if top_k and idx.size > top_k:
-            order = np.lexsort((doc_ids, -scores))[:top_k]
-            doc_ids, scores = doc_ids[order], scores[order]
-        return pd.DataFrame({"doc_id": doc_ids.astype(np.int64),
-                             "score": scores})
-
-    return kernel
-
-
-def _make_pl2_run_kernel(qcf: dict[str, tuple[float, float]], *,
-                         avg_dl: float, c: float, range_width: int,
-                         top_k: int, deleted=None):
-    """applyInPandas kernel for PL2 divergence-from-randomness over
-    one doc-range run (query.py::search_pl2, numpy form).  Matched
-    terms only; log2 computed as ln/ln2 with the SAME double constants
-    as the Catalyst expressions, so the engines stay bit-comparable.
-    ``qcf`` maps term -> (qtf, lambda_t = cf/N)."""
-    ln2 = math.log(2.0)
-    log2e = math.log2(math.e)
-    two_pi = 2.0 * math.pi
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        run = int(pdf["run"].iloc[0])
-        base = run * range_width
-        acc = np.zeros(range_width, dtype=np.float64)
-        touched = np.zeros(range_width, dtype=bool)
-        for row in pdf.itertuples(index=False):
-            tw = qcf.get(row.term)
-            if tw is None:
-                continue
-            qtf, lam = tw
-            ids = codec.delta_decode(row.doc_gaps_vb)
-            tfs = codec.varbyte_decode(row.tfs_vb).astype(np.float64)
-            dls = codec.varbyte_decode(row.doc_lens_vb).astype(np.float64)
-            off = ids - base
-            tfn = tfs * (np.log(1.0 + c * avg_dl / dls) / ln2)
-            gain = (tfn * (np.log(tfn / lam) / ln2)
-                    + (lam - tfn) * log2e
-                    + 0.5 * (np.log(two_pi * tfn) / ln2))
-            acc[off] += qtf / (tfn + 1.0) * gain
-            touched[off] = True
-        _mask_deleted_offsets(touched, deleted, base, range_width)
-        idx = np.flatnonzero(touched)
-        if idx.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"})
-        scores = acc[idx]
-        doc_ids = idx + base
-        if top_k and idx.size > top_k:
-            order = np.lexsort((doc_ids, -scores))[:top_k]
-            doc_ids, scores = doc_ids[order], scores[order]
-        return pd.DataFrame({"doc_id": doc_ids.astype(np.int64),
-                             "score": scores})
+            mtfs = (codec.varbyte_decode(row.max_tfs_vb).astype(np.int64)
+                    if mode == "w1" else None)
+            w_td = _np_doc_weight(mode, tfs, dls, mtfs,
+                                  dfs.get(row.term, 0),
+                                  cf=cfs.get(row.term, 0), **weight_args)
+            pos = ids - base
+            for qid, w_tq in consumers:
+                lists = parts.setdefault(qid, ([], [], []))
+                lists[0].append(pos)
+                lists[1].append(w_td * w_tq)
+                lists[2].append(dls)
+        out_q, out_d, out_s = [], [], []
+        for qid, (pos_list, val_list, dl_list) in parts.items():
+            uniq, inv = np.unique(np.concatenate(pos_list),
+                                  return_inverse=True)
+            scores = np.zeros(uniq.size, dtype=np.float64)
+            np.add.at(scores, inv, np.concatenate(val_list))
+            if mode == "qld":
+                const, q_len = q_const[qid]
+                dl = np.empty(uniq.size, dtype=np.float64)
+                dl[inv] = np.concatenate(dl_list)
+                scores = const + scores - q_len * np.log(dl + mu)
+            elif mode == "lmjm":
+                scores = q_const[qid][0] + scores
+            if del_off is not None:
+                live = ~np.isin(uniq, del_off, assume_unique=True)
+                uniq, scores = uniq[live], scores[live]
+            doc_ids = uniq + base
+            if top_k and doc_ids.size > top_k:
+                # exact top-k with (score desc, doc_id asc) tie-break
+                sel = np.lexsort((doc_ids, -scores))[:top_k]
+                doc_ids, scores = doc_ids[sel], scores[sel]
+            out_q.append(np.full(doc_ids.size, qid, dtype=np.int64))
+            out_d.append(doc_ids.astype(np.int64))
+            out_s.append(scores)
+        if not out_q:
+            return pd.DataFrame(
+                {"query_id": [], "doc_id": [], "score": []}).astype(
+                {"query_id": "int64", "doc_id": "int64", "score": "float64"})
+        return pd.DataFrame({"query_id": np.concatenate(out_q),
+                             "doc_id": np.concatenate(out_d),
+                             "score": np.concatenate(out_s)})
 
     return kernel
 
@@ -496,8 +462,7 @@ def _make_wand_partition_kernel(weights: dict[str, float],
                                 mode: str, n_docs: int, avg_dl: float,
                                 k1: float, b: float, range_width: int,
                                 top_k: int, acc_runs_seen=None,
-                                acc_runs_pruned=None, deleted=None,
-                                delta: float = 0.0):
+                                acc_runs_pruned=None, deleted=None):
     """mapInPandas kernel over a run-sorted partition: block-max WAND
     with the top-k heap + threshold theta carried ACROSS runs.
 
@@ -628,8 +593,7 @@ def _make_maxscore_partition_kernel(weights: dict[str, float],
                                     k1: float, b: float, range_width: int,
                                     top_k: int, acc_runs_seen=None,
                                     acc_runs_pruned=None,
-                                    acc_nonessential=None, deleted=None,
-                                    delta: float = 0.0):
+                                    acc_nonessential=None, deleted=None):
     """mapInPandas kernel over a run-sorted partition: MaxScore pruning
     (Turtle & Flood 1995) with the top-k heap + theta carried across
     runs — the classic alternative to block-max WAND, here sharing its
@@ -762,93 +726,135 @@ def _make_maxscore_partition_kernel(weights: dict[str, float],
     return kernel
 
 
-BATCH_SCORE_SCHEMA = "query_id long, doc_id long, score double"
+_VARIANTS = ("bm25plus", "bm25l", "pivoted")
+_LM = ("qld", "lmjm", "pl2")
+_COSINE = ("w1", "w2")
+SEGMENT_MODES = ("bm25",) + _COSINE + _VARIANTS + _LM
 
 
-def _make_batch_run_kernel(term_q: dict[str, list[tuple[int, float]]],
-                           dfs: dict[str, int], *, mode: str, n_docs: int,
-                           avg_dl: float, k1: float, b: float,
-                           range_width: int, top_k: int, deleted=None):
-    """applyInPandas kernel over one doc-range run scoring MANY queries
-    in a single decode pass.
+def _scan(sidx: SegmentIndex, terms: list[str]) -> DataFrame:
+    """The query terms' segment rows: bucket partition pruning plus
+    row-group pushdown on ``term``."""
+    buckets = sorted({storage.term_bucket_py(t, sidx.n_buckets)
+                      for t in terms})
+    return sidx.segments.filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
-    Each posting row is decoded ONCE and its per-doc weight w_td
-    computed ONCE (w_td depends on the term/doc stats, not the query);
-    every query consuming the term then adds w_td * w_tq into its own
-    candidate list.  Per-query accumulation is SPARSE (sort +
-    add.reduceat over the touched positions), so kernel memory is
-    O(sum of candidate postings), not O(n_queries * range_width) —
-    the shape that survives 10k-query offline scoring batches at a
-    cluster-scale range_width of 2^22."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        run = int(pdf["run"].iloc[0])
-        base = run * range_width
-        # run-local offsets of tombstoned docs (sorted slice, O(log D))
-        del_off = None
-        if deleted is not None:
-            dels = deleted.value
-            lo, hi = np.searchsorted(dels, [base, base + range_width])
-            if hi > lo:
-                del_off = dels[lo:hi] - base
-        # qid -> (list[pos arrays], list[partial-score arrays])
-        parts: dict[int, tuple[list, list]] = {}
-        for row in pdf.itertuples(index=False):
-            consumers = term_q.get(row.term)
-            if not consumers:
-                continue
-            df_t = dfs.get(row.term, 0)
-            ids = codec.delta_decode(row.doc_gaps_vb)
-            tfs = codec.varbyte_decode(row.tfs_vb).astype(np.int64)
-            dls = codec.varbyte_decode(row.doc_lens_vb).astype(np.int64)
-            mtfs = codec.varbyte_decode(row.max_tfs_vb).astype(np.int64)
-            w_td = _np_doc_weight(mode, tfs, dls, mtfs, df_t, n_docs,
-                                  avg_dl, k1, b)
-            pos = ids - base
-            for qid, w_tq in consumers:
-                lists = parts.setdefault(qid, ([], []))
-                lists[0].append(pos)
-                # zero products kept: OR semantics — a doc containing a
-                # zero-weight query term is still a candidate (D5 quirk)
-                lists[1].append(w_td * w_tq)
-        out_q, out_d, out_s = [], [], []
-        for qid, (pos_list, val_list) in parts.items():
-            pos = np.concatenate(pos_list)
-            val = np.concatenate(val_list)
-            order = np.argsort(pos, kind="stable")
-            pos, val = pos[order], val[order]
-            uniq, start = np.unique(pos, return_index=True)
-            scores = np.add.reduceat(val, start)
-            if del_off is not None:
-                live = ~np.isin(uniq, del_off, assume_unique=True)
-                uniq, scores = uniq[live], scores[live]
-                if uniq.size == 0:
-                    continue
-            doc_ids = uniq + base
-            if top_k and doc_ids.size > top_k:
-                sel = np.lexsort((doc_ids, -scores))[:top_k]
-                doc_ids, scores = doc_ids[sel], scores[sel]
-            out_q.append(np.full(doc_ids.size, qid, dtype=np.int64))
-            out_d.append(doc_ids.astype(np.int64))
-            out_s.append(scores.astype(np.float64))
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"})
-        return pd.DataFrame({"query_id": np.concatenate(out_q),
-                             "doc_id": np.concatenate(out_d),
-                             "score": np.concatenate(out_s)})
-
-    return kernel
+def _score_queries(sidx: SegmentIndex, bags: list[dict[str, int]], *,
+                   k: int, mode: str, k1: float, b: float, mu: float,
+                   lam: float, pl2_c: float, delta: float | None,
+                   slope: float,
+                   df_override: dict[str, int] | None,
+                   cf_override: dict[str, int] | None,
+                   cf_total_override: float | None) -> DataFrame | None:
+    """The one exhaustive scoring plan shared by ``search_segments`` and
+    ``search_segments_batch``: query bag i is query_id i.  Driver side,
+    the term statistics and every query's weights become data — a
+    ``term -> [(query_id, w_tq)]`` map plus per-query constants; the
+    pruned scan then takes one shuffle on ``run`` into
+    _make_run_kernel.  Returns (query_id, doc_id, score) rows — each
+    run's top-k per query, or for the cosine modes every candidate
+    normalized by the build-time norms table — or None when no query
+    term can match."""
+    if mode not in SEGMENT_MODES:
+        raise ValueError(f"unknown segment scoring mode {mode!r}; "
+                         f"expected one of {SEGMENT_MODES}")
+    if sidx.as_of_grp is not None and mode in _COSINE:
+        # the norms table is current-view: snapshot-era cosine scores
+        # would silently normalize against post-snapshot statistics
+        raise ValueError(
+            "cosine modes need the CURRENT norms table; an as-of "
+            "snapshot view supports bm25/qld only")
+    if mode == "lmjm" and not 0.0 < lam < 1.0:
+        raise ValueError("lam must be in (0, 1)")
+    terms = sorted({t for bag in bags for t in bag})
+    if not terms:
+        return None
+    weight_args = dict(n_docs=sidx.n_docs, avg_dl=sidx.avg_doc_len, k1=k1,
+                       b=b)
+    term_q: dict[str, list[tuple[int, float]]] = {}
+    dfs: dict[str, int] = {}
+    cfs: dict[str, int] = {}
+    q_const: dict[int, tuple[float, float]] = {}
+    q_norms: list[float] = []
+    if mode in _LM:
+        cfs = cf_override if cf_override is not None else sidx.cf_of(terms)
+        c_total = (float(cf_total_override) if cf_total_override is not None
+                   else float(sidx.cf_total()))
+        weight_args.update(c_total=c_total, mu=mu, lam=lam, c=pl2_c)
+        for qid, bag in enumerate(bags):
+            # only terms with collection mass score (or define candidates)
+            qterms = sorted(t for t in bag if t in cfs)
+            for t in qterms:
+                term_q.setdefault(t, []).append((qid, float(bag[t])))
+            if mode == "qld":
+                q_const[qid] = (
+                    sum(bag[t] * math.log(mu * cfs[t] / c_total)
+                        for t in qterms),
+                    float(sum(bag[t] for t in qterms)))
+            elif mode == "lmjm":
+                q_const[qid] = (
+                    sum(bag[t] * math.log(lam * cfs[t] / c_total)
+                        for t in qterms), 0.0)
+    else:
+        dfs = df_override if df_override is not None else sidx.df_of(terms)
+        # BM25 variants (query.py parity): delta defaults per mode;
+        # pivoted reads its slope through the b slot — the default MUST
+        # track query.py::search_pivoted (slope=0.2), not BM25's b=0.75
+        if delta is None:
+            delta = {"bm25plus": 1.0, "bm25l": 0.5}.get(mode, 0.0)
+        weight_args.update(b=slope if mode == "pivoted" else b, delta=delta)
+        for qid, bag in enumerate(bags):
+            weights, q_norm = compute_query_weights(
+                bag, dfs, sidx.n_docs, mode)
+            q_norms.append(q_norm)
+            for t, w in weights.items():
+                term_q.setdefault(t, []).append((qid, w))
+    if not term_q:
+        return None
+    kernel = _make_run_kernel(
+        term_q, dfs, cfs, q_const, mode=mode, range_width=sidx.range_width,
+        top_k=0 if mode in _COSINE else k, deleted=sidx.deleted_bc(),
+        **weight_args)
+    scored = _scan(sidx, sorted(term_q)).groupBy("run").applyInPandas(
+        kernel, BATCH_SCORE_SCHEMA)
+    if mode in _COSINE:
+        # cosine normalize (J3/W4): doc norm from the build-time norms
+        # table, query norm looked up by query_id in an array literal
+        # (a joined DataFrame of query norms would cost a Spark job)
+        norm_col = "norm_w1" if mode == "w1" else "norm_w2"
+        q_norm = F.get(F.lit(np.array(q_norms, dtype=np.float64)),
+                       F.col("query_id").cast("int"))
+        scored = (
+            scored.join(sidx.norms.select("doc_id", norm_col), "doc_id")
+            .select(
+                "query_id", "doc_id",
+                F.when((F.col(norm_col) > 0) & (q_norm > 0),
+                       F.col("score") / F.col(norm_col) / q_norm)
+                .otherwise(F.lit(0.0)).alias("score"),
+            )
+        )
+    return scored
 
 
 def search_segments_batch(spark: SparkSession, sidx: SegmentIndex,
                           queries: list[str], k: int = 5,
                           mode: str = "bm25", k1: float = 1.2,
-                          b: float = 0.75, stem: bool = False) -> DataFrame:
+                          b: float = 0.75, stem: bool = False,
+                          mu: float = 1000.0, lam: float = 0.1,
+                          pl2_c: float = 1.0, delta: float | None = None,
+                          slope: float = 0.2,
+                          df_override: dict[str, int] | None = None,
+                          cf_override: dict[str, int] | None = None,
+                          cf_total_override: float | None = None
+                          ) -> DataFrame:
     """Score a whole query WORKLOAD in one pass over the index:
-    (query_id, rank, doc_id, score), per-query top-k, rank-identical
-    per query to ``search_segments``.
+    (query_id, rank, doc_id, score), per-query top-k.  Every mode of
+    ``search_segments`` is supported, with the same scoring keywords,
+    and each query's rows equal the exhaustive single-query path's
+    bit for bit (both run _score_queries; a single query is a batch of
+    one) — hence rank-identical to every strategy.
 
     This is the offline/throughput shape (nightly eval sets, training-
     data retrieval): the scan is pruned to the UNION of all query
@@ -861,68 +867,17 @@ def search_segments_batch(spark: SparkSession, sidx: SegmentIndex,
     sf0.1 — bench.py ``bm25_query_set_20_batch``).
 
     Queries whose tokens are all stopwords (empty bag) yield no rows.
-
-    Supported modes: bm25 / w1 / w2 (the batch kernel computes W1/W2
-    cosine normalization; the LM family and the BM25 variants carry
-    per-mode kernel_args the batch path does not thread).  Anything
-    else raises loudly — silently mis-normalizing (bm25plus would
-    all-zero, qld would crash executor-side) is worse than refusing.
     """
     from pyspark.sql import Window
 
-    if mode not in ("bm25", "w1", "w2"):
-        raise ValueError(
-            f"search_segments_batch supports bm25/w1/w2, not {mode!r}; "
-            "run the single-query path per query for the LM/variant "
-            "families")
-    if sidx.as_of_grp is not None and mode in ("w1", "w2"):
-        # same contract as search_segments: the norms table is
-        # current-view, so snapshot-era cosine scores would silently
-        # normalize against post-snapshot corpus statistics
-        raise ValueError(
-            "cosine modes need the CURRENT norms table; an as-of "
-            "snapshot view supports bm25/qld only")
-    bags = {qid: parse_query(q, stem=stem) for qid, q in enumerate(queries)}
-    terms = sorted({t for bag in bags.values() for t in bag})
-    if not terms:
+    scored = _score_queries(
+        sidx, [parse_query(q, stem=stem) for q in queries], k=k,
+        mode=mode, k1=k1, b=b, mu=mu, lam=lam, pl2_c=pl2_c, delta=delta,
+        slope=slope, df_override=df_override, cf_override=cf_override,
+        cf_total_override=cf_total_override)
+    if scored is None:
         return spark.createDataFrame([], "query_id long, rank int, "
                                          "doc_id long, score double")
-    dfs = sidx.df_of(terms)
-    term_q: dict[str, list[tuple[int, float]]] = {}
-    q_norms: dict[int, float] = {}
-    for qid, bag in sorted(bags.items()):
-        weights, q_norm = compute_query_weights(bag, dfs, sidx.n_docs, mode)
-        q_norms[qid] = q_norm
-        for t, w in weights.items():
-            term_q.setdefault(t, []).append((qid, w))
-
-    buckets = sorted({storage.term_bucket_py(t, sidx.n_buckets) for t in terms})
-    hits = sidx.segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-    kernel = _make_batch_run_kernel(
-        term_q, dfs, mode=mode, n_docs=sidx.n_docs, avg_dl=sidx.avg_doc_len,
-        k1=k1, b=b, range_width=sidx.range_width,
-        top_k=k if mode == "bm25" else 0, deleted=sidx.deleted_bc())
-    scored = hits.groupBy("run").applyInPandas(kernel, BATCH_SCORE_SCHEMA)
-
-    if mode != "bm25":
-        # cosine normalize (W4): doc norm from the build-time norms
-        # table, query norm from a broadcast (query_id, q_norm) dim
-        norm_col = "norm_w1" if mode == "w1" else "norm_w2"
-        qn = spark.createDataFrame(
-            [(qid, q_norms[qid]) for qid in sorted(q_norms)],
-            "query_id long, q_norm double")
-        scored = (
-            scored.join(sidx.norms.select("doc_id", norm_col), "doc_id")
-            .join(F.broadcast(qn), "query_id")
-            .select(
-                "query_id", "doc_id",
-                F.when((F.col(norm_col) > 0) & (F.col("q_norm") > 0),
-                       F.col("score") / F.col(norm_col) / F.col("q_norm"))
-                .otherwise(F.lit(0.0)).alias("score"),
-            )
-        )
-
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -944,14 +899,16 @@ def search_segments(spark: SparkSession, sidx: SegmentIndex, query: str,
                     cf_total_override: float | None = None) -> DataFrame:
     """Top-k over the compressed index; result schema (doc_id, score),
     ordered, rank-identical to the DataFrame engine and the oracle.
-    ``mode='qld'`` scores Dirichlet query-likelihood (``mu``) — same
-    pruned scan + one run-keyed Python pass as bm25 exhaustive.
+    Modes: ``SEGMENT_MODES`` — bm25, the cosine w1/w2, the BM25
+    variants (``delta``, ``slope``) and the cf-statistics LM family
+    (qld ``mu``, lmjm ``lam``, pl2 ``pl2_c``).
 
-    ``strategy``: ``"exhaustive"`` (score every posting),
-    ``"wand"`` (block-max WAND), ``"maxscore"`` (MaxScore
-    essential/non-essential split), or ``"auto"``; all are
-    rank-identical, the pruned ones skip work via the per-block
-    skyline metadata.
+    ``strategy`` (bm25 only; the other modes always score exhaustively):
+    ``"exhaustive"`` (score every posting — the shared scorer of
+    ``search_segments_batch``, on a batch of one), ``"wand"``
+    (block-max WAND), ``"maxscore"`` (MaxScore essential/non-essential
+    split), or ``"auto"``; all are rank-identical, the pruned ones skip
+    work via the per-block skyline metadata.
 
     ``prune_counters``: optional ``{"runs_seen": acc, "runs_pruned":
     acc, "nonessential": acc}`` Spark accumulators, incremented by the
@@ -964,96 +921,10 @@ def search_segments(spark: SparkSession, sidx: SegmentIndex, query: str,
     ``dataclasses.replace``-d SegmentIndex carrying the global
     n_docs/avg_doc_len.  Terms absent from an override score zero,
     same as terms absent from the dictionary."""
-    import math as _math
-
-    if sidx.as_of_grp is not None and mode in ("w1", "w2"):
-        raise ValueError(
-            "cosine modes need the CURRENT norms table; an as-of "
-            "snapshot view supports bm25/qld only")
-    bag = parse_query(query, stem=stem)
-    if not bag:
-        return spark.createDataFrame([], SCORE_SCHEMA)
-    terms = sorted(bag)
-
-    if mode in ("qld", "lmjm", "pl2"):
-        # the cf-statistics LM family: same pruned scan + one
-        # run-keyed Python pass, kernels differ only in the per-posting
-        # accumulation and the driver-side constants
-        cfs = cf_override if cf_override is not None else sidx.cf_of(terms)
-        qterms = sorted(t for t in bag if t in cfs)
-        if not qterms:
-            return spark.createDataFrame([], SCORE_SCHEMA)
-        c_total = (float(cf_total_override) if cf_total_override is not None
-                   else float(sidx.cf_total()))
-        buckets = sorted({storage.term_bucket_py(t, sidx.n_buckets)
-                          for t in qterms})
-        hits = sidx.segments.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(qterms))
-        if mode == "qld":
-            const = sum(bag[t] * _math.log(mu * cfs[t] / c_total)
-                        for t in qterms)
-            q_len = float(sum(bag[t] for t in qterms))
-            kernel = _make_qld_run_kernel(
-                {t: (float(bag[t]), float(cfs[t])) for t in qterms},
-                c_total=c_total, mu=mu, const=const, q_len=q_len,
-                range_width=sidx.range_width, top_k=k,
-                deleted=sidx.deleted_bc())
-        elif mode == "lmjm":
-            if not 0.0 < lam < 1.0:
-                raise ValueError("lam must be in (0, 1)")
-            const = sum(bag[t] * _math.log(lam * cfs[t] / c_total)
-                        for t in qterms)
-            kernel = _make_lmjm_run_kernel(
-                {t: (float(bag[t]), float(cfs[t])) for t in qterms},
-                c_total=c_total, lam=lam, const=const,
-                range_width=sidx.range_width, top_k=k,
-                deleted=sidx.deleted_bc())
-        else:
-            n_docs = float(sidx.n_docs)
-            kernel = _make_pl2_run_kernel(
-                {t: (float(bag[t]), cfs[t] / n_docs) for t in qterms},
-                avg_dl=float(sidx.avg_doc_len), c=pl2_c,
-                range_width=sidx.range_width, top_k=k,
-                deleted=sidx.deleted_bc())
-        scored = hits.groupBy("run").applyInPandas(kernel, SCORE_SCHEMA)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    dfs = df_override if df_override is not None else sidx.df_of(terms)
-    weights, q_norm = compute_query_weights(bag, dfs, sidx.n_docs, mode)
-
-    buckets = sorted({storage.term_bucket_py(t, sidx.n_buckets) for t in terms})
-    hits = sidx.segments.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    )
-
-    # BM25-shaped variants (query.py parity): delta defaults per mode;
-    # the WAND/MaxScore skylines are bm25-specific, so the variants run
-    # the exhaustive kernel (still run-local top-k, same plan shape)
-    if delta is None:
-        delta = {"bm25plus": 1.0, "bm25l": 0.5}.get(mode, 0.0)
-    if mode == "pivoted":
-        # pivoted's kernel reads the slope through the b slot; default
-        # here MUST track query.py::search_pivoted (slope=0.2), not
-        # BM25's b=0.75 — parity holds for default calls on both paths
-        b = slope
-    if mode in ("bm25plus", "bm25l", "pivoted") and strategy in (
-            "wand", "maxscore"):
+    if mode in _VARIANTS and strategy in ("wand", "maxscore"):
         raise ValueError(
             f"strategy={strategy!r} bounds are bm25-specific; "
             f"mode={mode!r} runs exhaustive")
-
-    kernel_args = dict(mode=mode, n_docs=sidx.n_docs, avg_dl=sidx.avg_doc_len,
-                       k1=k1, b=b, range_width=sidx.range_width,
-                       deleted=sidx.deleted_bc(), delta=delta)
-
-    if strategy == "auto" and mode in ("bm25plus", "bm25l", "pivoted"):
-        strategy = "exhaustive"
-    if not k and strategy in ("auto", "wand", "maxscore"):
-        # k=0 is the emit-all mode: there is no k-th score, hence no
-        # pruning threshold — the WAND/MaxScore kernels would deref an
-        # empty heap.  Degrade to the semantically identical exhaustive
-        # scan instead of crashing executor-side.
-        strategy = "exhaustive"
     if strategy == "auto":
         # wand runs the same single-job plan as exhaustive (one shuffle
         # on run, one Python pass) plus a cheap numpy metadata pass per
@@ -1061,37 +932,37 @@ def search_segments(spark: SparkSession, sidx: SegmentIndex, query: str,
         # (multi-run indexes); single-run indexes have nothing to skip.
         n_runs_max = sidx.n_docs // sidx.range_width + 1
         strategy = "wand" if n_runs_max > 1 else "exhaustive"
-
-    if mode in ("bm25", "bm25plus", "bm25l", "pivoted"):
-        if strategy in ("wand", "maxscore"):
-            counters = prune_counters or {}
-            make = (_make_wand_partition_kernel if strategy == "wand"
-                    else _make_maxscore_partition_kernel)
-            extra = ({} if strategy == "wand"
-                     else {"acc_nonessential":
-                           counters.get("nonessential")})
-            kernel = make(
-                weights, dfs, top_k=k,
-                acc_runs_seen=counters.get("runs_seen"),
-                acc_runs_pruned=counters.get("runs_pruned"),
-                **extra, **kernel_args)
-            # same shuffle the exhaustive groupBy(run) pays; sorting
-            # within partitions makes runs contiguous for the kernel
-            part = hits.repartition("run").sortWithinPartitions("run")
-            scored = part.mapInPandas(kernel, SCORE_SCHEMA)
-        else:
-            kernel = _make_run_kernel(weights, dfs, top_k=k, **kernel_args)
-            scored = hits.groupBy("run").applyInPandas(kernel, SCORE_SCHEMA)
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    # cosine modes: exhaustive dots + norms join (J3/W4)
-    kernel = _make_run_kernel(weights, dfs, top_k=0, **kernel_args)
-    dots = hits.groupBy("run").applyInPandas(kernel, SCORE_SCHEMA)
-    norm_col = "norm_w1" if mode == "w1" else "norm_w2"
-    scores = dots.join(sidx.norms.select("doc_id", norm_col), "doc_id").select(
-        "doc_id",
-        F.when((F.col(norm_col) > 0) & (F.lit(q_norm) > 0),
-               F.col("score") / F.col(norm_col) / F.lit(q_norm))
-        .otherwise(F.lit(0.0)).alias("score"),
-    )
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    bag = parse_query(query, stem=stem)
+    # k=0 is the emit-all mode: there is no k-th score, hence no
+    # pruning threshold — it runs the semantically identical exhaustive
+    # scan instead
+    if mode == "bm25" and strategy in ("wand", "maxscore") and k and bag:
+        terms = sorted(bag)
+        dfs = df_override if df_override is not None else sidx.df_of(terms)
+        weights, _ = compute_query_weights(bag, dfs, sidx.n_docs, mode)
+        counters = prune_counters or {}
+        make = (_make_wand_partition_kernel if strategy == "wand"
+                else _make_maxscore_partition_kernel)
+        extra = ({} if strategy == "wand"
+                 else {"acc_nonessential": counters.get("nonessential")})
+        kernel = make(
+            weights, dfs, mode=mode, n_docs=sidx.n_docs,
+            avg_dl=sidx.avg_doc_len, k1=k1, b=b,
+            range_width=sidx.range_width, top_k=k,
+            deleted=sidx.deleted_bc(),
+            acc_runs_seen=counters.get("runs_seen"),
+            acc_runs_pruned=counters.get("runs_pruned"), **extra)
+        # same shuffle the exhaustive groupBy(run) pays; sorting
+        # within partitions makes runs contiguous for the kernel
+        part = _scan(sidx, terms).repartition("run").sortWithinPartitions(
+            "run")
+        scored = part.mapInPandas(kernel, SCORE_SCHEMA)
+    else:
+        scored = _score_queries(
+            sidx, [bag], k=k, mode=mode, k1=k1, b=b, mu=mu, lam=lam,
+            pl2_c=pl2_c, delta=delta, slope=slope, df_override=df_override,
+            cf_override=cf_override, cf_total_override=cf_total_override)
+        if scored is None:
+            return spark.createDataFrame([], SCORE_SCHEMA)
+        scored = scored.select("doc_id", "score")
+    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -22,10 +22,11 @@ frontends): clients submit queries and get a Future; a single worker
 thread drains whatever has queued (up to ``max_batch``, waiting at
 most ``max_wait_ms`` for the first arrival to age) into ONE
 ``search_segments_batch`` job and fans the per-query top-k back out to
-the futures.  Per-query results are rank-identical to
-``search_segments`` (the batch scorer's contract, gate
-``bm25_batch_topk``); the price is up to ``max_wait_ms`` of added
-latency under low load.
+the futures.  Every scoring mode and keyword of ``search_segments``
+is served: the batch scorer and the exhaustive single-query path run
+the same kernel, so per-query results equal ``search_segments``' bit
+for bit (gate ``bm25_batch_topk``); the price is up to
+``max_wait_ms`` of added latency under low load.
 
 Backpressure: the inbound queue is bounded (``max_queue``).  When it
 is full, ``submit`` either blocks the client (``block=True``, the
@@ -42,6 +43,7 @@ is governed by batch size, not client-thread count.
 
 from __future__ import annotations
 
+import inspect
 import queue
 import threading
 import time
@@ -87,13 +89,17 @@ class MicroBatchServer:
     """
 
     def __init__(self, spark: SparkSession, sidx: SegmentIndex, *,
-                 k: int = 10, mode: str = "bm25", k1: float = 1.2,
-                 b: float = 0.75, stem: bool = False,
-                 max_batch: int = 64, max_wait_ms: int = 10,
-                 max_queue: int = 1024):
+                 k: int = 10, max_batch: int = 64, max_wait_ms: int = 10,
+                 max_queue: int = 1024, **score_kw):
+        """``score_kw``: any scoring keyword of
+        ``search_segments_batch`` (mode, k1, b, stem, mu, lam, ...),
+        forwarded to every batch; an unknown one raises TypeError here
+        rather than failing every future."""
+        self._kw = dict(k=k, **score_kw)
+        inspect.signature(search_segments_batch).bind(
+            spark, sidx, [], **self._kw)
         self._spark = spark
         self._sidx = sidx
-        self._kw = dict(k=k, mode=mode, k1=k1, b=b, stem=stem)
         self._max_batch = max_batch
         self._max_wait = max_wait_ms / 1000.0
         self._q: queue.Queue = queue.Queue(maxsize=max_queue)

@@ -96,8 +96,7 @@ def main(argv: list[str] | None = None) -> int:
                          "concurrent client threads into the micro-"
                          "batching server (operators/serving.py) — "
                          "per-query results identical to the default "
-                         "path, throughput summary on stderr; "
-                         "bm25/w1/w2 only")
+                         "path, throughput summary on stderr")
     ap.add_argument("--stem", action="store_true")
     ap.add_argument("--output", default=None, help="parquet output path")
     ap.add_argument("--trec-run", default=None, metavar="FILE",
@@ -130,18 +129,15 @@ def main(argv: list[str] | None = None) -> int:
         )
 
     if args.serve is not None:
-        if args.mode not in ("bm25", "w1", "w2"):
-            ap.error("--serve supports bm25/w1/w2 (the fused batch "
-                     "scorer's modes)")
         if args.batch or args.phrase or args.span_near \
                 or args.render_vectors or args.shards:
             ap.error("--serve is exclusive with --batch/--phrase/"
                      "--span-near/--render-vectors/--shards")
         if args.serve < 1:
             ap.error("--serve needs at least one client thread")
-    if args.batch and args.mode not in ("bm25", "w1", "w2"):
-        ap.error("--batch supports bm25/w1/w2 (other modes score "
-                 "per query)")
+    if (args.batch or args.serve is not None) and args.mode == "sdm":
+        ap.error("--batch/--serve score bag-of-words modes; --mode sdm "
+                 "reads the positional store per query")
     if args.batch and (args.phrase or args.span_near):
         ap.error("--batch is exclusive with --phrase/--span-near "
                  "(the fused scan has no positional path)")
@@ -216,12 +212,14 @@ def main(argv: list[str] | None = None) -> int:
     sidx = SegmentIndex.load(spark, args.index_dir,
                              as_of_grp=args.as_of_grp)
     all_rows = []
+    score_kw = dict(k=args.k, mode=args.mode, k1=args.k1, b=args.b,
+                    stem=args.stem, mu=args.mu, lam=args.lam,
+                    pl2_c=args.pl2_c, delta=args.delta, slope=args.slope)
     if args.batch:
         from ir_spark.operators.segment_query import search_segments_batch
 
-        got = search_segments_batch(
-            spark, sidx, queries, k=args.k, mode=args.mode,
-            k1=args.k1, b=args.b, stem=args.stem).collect()
+        got = search_segments_batch(spark, sidx, queries,
+                                    **score_kw).collect()
         by_q = {}
         for row in got:
             by_q.setdefault(int(row["query_id"]), []).append(row)
@@ -238,8 +236,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from ir_spark.operators.serving import MicroBatchServer
 
-        srv = MicroBatchServer(spark, sidx, k=args.k, mode=args.mode,
-                               k1=args.k1, b=args.b, stem=args.stem)
+        srv = MicroBatchServer(spark, sidx, **score_kw)
         try:
             srv.submit(queries[0]).result()  # warm (untimed)
             t0 = time.time()
@@ -304,12 +301,8 @@ def main(argv: list[str] | None = None) -> int:
                                  float(row["score"])))
     else:
         for qid, q in enumerate(queries, start=1):
-            hits = search_segments(
-                spark, sidx, q, k=args.k, mode=args.mode, k1=args.k1,
-                b=args.b, stem=args.stem, strategy=args.strategy,
-                mu=args.mu, lam=args.lam, pl2_c=args.pl2_c,
-                delta=args.delta, slope=args.slope,
-            ).collect()
+            hits = search_segments(spark, sidx, q, strategy=args.strategy,
+                                   **score_kw).collect()
             for rank, row in enumerate(hits, start=1):
                 all_rows.append((qid, q, rank, int(row["doc_id"]),
                                  float(row["score"])))

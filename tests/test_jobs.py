@@ -137,7 +137,8 @@ def test_merge_index_job(tmp_path, capsys):
 
 def test_query_job_batch_maxscore_qld_agree(tmp_path, capsys):
     """The CLI's --batch fused pass, --strategy maxscore, and per-query
-    default must produce identical result files; --mode qld runs."""
+    default must produce identical result files; so must --mode qld
+    per query, through --batch and through --serve."""
     sys.path.insert(0, os.path.join(REPO, "jobs"))
     import build_index
     import query_index
@@ -174,13 +175,21 @@ def test_query_job_batch_maxscore_qld_agree(tmp_path, capsys):
     assert got["plain"] == got["batch"] == got["maxscore"]
     assert len(got["plain"]) == 10
 
-    out_qld = str(tmp_path / "res_qld")
-    assert query_index.main([
-        "--index-dir", idx, "--queries", str(qfile), "--k", "5",
-        "--mode", "qld", "--output", out_qld, "--local-cpus", "8"]) == 0
-    capsys.readouterr()
-    rows = spark.read.parquet(out_qld).collect()
-    assert len(rows) == 10
+    # --mode qld, per query, through the fused --batch pass and through
+    # the micro-batching server
+    for tag, extra in (("qld", ["--mode", "qld"]),
+                       ("batch_qld", ["--batch", "--mode", "qld"]),
+                       ("serve_qld", ["--serve", "2", "--mode", "qld"])):
+        out = str(tmp_path / f"res_{tag}")
+        assert query_index.main([
+            "--index-dir", idx, "--queries", str(qfile), "--k", "5",
+            "--output", out, "--local-cpus", "8"] + extra) == 0
+        capsys.readouterr()
+        got[tag] = sorted((r["query_id"], r["rank"], r["doc_id"],
+                           r["score"])
+                          for r in spark.read.parquet(out).collect())
+    assert got["batch_qld"] == got["serve_qld"] == got["qld"]
+    assert len(got["qld"]) == 10
 
     # --serve (micro-batching server, 4 client threads) must write the
     # identical result set to the per-query path

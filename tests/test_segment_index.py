@@ -141,6 +141,7 @@ class TestResume:
 
 
 MODES = ("bm25", "w1", "w2")
+ALL_MODES = MODES + ("qld", "lmjm", "pl2", "bm25plus", "bm25l", "pivoted")
 
 
 class TestSegmentQueryParity:
@@ -183,22 +184,22 @@ class TestSegmentQueryParity:
             for (gd, gs), (wd, ws) in zip(got, want):
                 assert abs(gs - ws) < 1e-9, (mode, q)
 
-    @pytest.mark.parametrize("mode", MODES)
+    @pytest.mark.parametrize("mode", ALL_MODES)
     def test_batch_equals_per_query(self, spark, sidx, mode):
         """search_segments_batch scores the whole workload in one pass
-        and must be rank- and score-identical (micro-quantized) per
-        query to the single-query path — including all-stopword and
-        unseen-term queries."""
+        and must be rank- and score-identical (exact floats) per query
+        to the single-query path in every mode — including all-stopword
+        and unseen-term queries."""
         qs = list(REFERENCE_QUERIES[:6]) + EDGE_QUERIES
         got: dict[int, list] = {}
         for r in SQ.search_segments_batch(spark, sidx, qs, k=5,
                                           mode=mode).collect():
             got.setdefault(r.query_id, []).append(
-                (r.rank, r.doc_id, round(r.score * 1e6)))
+                (r.rank, r.doc_id, r.score))
         for qid, q in enumerate(qs):
             single = SQ.search_segments(spark, sidx, q, k=5,
                                         mode=mode).collect()
-            want = [(i + 1, r.doc_id, round(r.score * 1e6))
+            want = [(i + 1, r.doc_id, r.score)
                     for i, r in enumerate(single)]
             assert got.get(qid, []) == want, (mode, q)
 
@@ -413,18 +414,9 @@ def test_schema_segments_matches_writer(spark, tmp_path):
         "schema.SEGMENTS drifted from the writer's real columns")
 
 
-def test_df_of_first_call_is_one_collect(spark, index_dir, oracle_index,
-                                         monkeypatch):
-    """The first ``df_of`` on a fresh load pulls the summed dictionary
-    with ONE bounded collect (no separate count pass): it runs exactly
-    the jobs of one collect of the term aggregate, later calls run
-    none, and the answers equal the pushdown path's and the oracle's."""
-    from pyspark.sql import functions as F
-
+def _jobs_counter(spark):
+    """``jobs_of(group, fn) -> (fn(), number of Spark jobs it ran)``."""
     sc = spark.sparkContext
-    terms = sorted(oracle_index.postings)[::40] + ["zzqunseenterm"]
-    want = {t: oracle_index.df(t) for t in terms
-            if t in oracle_index.postings}
 
     def jobs_of(group, fn):
         sc.setJobGroup(group, group)
@@ -433,6 +425,22 @@ def test_df_of_first_call_is_one_collect(spark, index_dir, oracle_index,
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs_of
+
+
+def test_df_of_first_call_is_one_collect(spark, index_dir, oracle_index,
+                                         monkeypatch):
+    """The first ``df_of`` on a fresh load pulls the summed dictionary
+    with ONE bounded collect (no separate count pass): it runs exactly
+    the jobs of one collect of the term aggregate, later calls run
+    none, and the answers equal the pushdown path's and the oracle's."""
+    from pyspark.sql import functions as F
+
+    terms = sorted(oracle_index.postings)[::40] + ["zzqunseenterm"]
+    want = {t: oracle_index.df(t) for t in terms
+            if t in oracle_index.postings}
+    jobs_of = _jobs_counter(spark)
 
     ref = SQ.SegmentIndex.load(spark, index_dir)
     agg = ref.dictionary.groupBy("term").agg(F.sum("df").alias("df"))
@@ -449,4 +457,29 @@ def test_df_of_first_call_is_one_collect(spark, index_dir, oracle_index,
                         len(oracle_index.postings) - 1)
     big = SQ.SegmentIndex.load(spark, index_dir)
     assert big.df_of(terms) == want
+    assert big._dfs["local_dict"] is None
+
+
+def test_cf_stats_share_the_df_map(spark, index_dir, oracle_index,
+                                   monkeypatch):
+    """``df_of``'s memoized term-stat map carries the summed cf too:
+    after one ``df_of``, ``cf_of`` and ``cf_total`` run no Spark job
+    and answer the oracle's collection frequencies — the same values
+    the above-LOCAL_DICT_MAX pushdown path computes."""
+    terms = sorted(oracle_index.postings)[::40] + ["zzqunseenterm"]
+    cf = {t: sum(tf for _d, tf in oracle_index.postings[t])
+          for t in terms if t in oracle_index.postings}
+    total = sum(tf for plist in oracle_index.postings.values()
+                for _d, tf in plist)
+    jobs_of = _jobs_counter(spark)
+
+    sidx = SQ.SegmentIndex.load(spark, index_dir)
+    sidx.df_of(terms)
+    assert jobs_of("cf_of_local", lambda: sidx.cf_of(terms)) == (cf, 0)
+    assert jobs_of("cf_total_local", sidx.cf_total) == (total, 0)
+
+    monkeypatch.setattr(SQ.SegmentIndex, "LOCAL_DICT_MAX",
+                        len(oracle_index.postings) - 1)
+    big = SQ.SegmentIndex.load(spark, index_dir)
+    assert (big.cf_of(terms), big.cf_total()) == (cf, total)
     assert big._dfs["local_dict"] is None
